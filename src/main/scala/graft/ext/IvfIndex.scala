@@ -39,9 +39,11 @@ object IvfIndex {
     * corpus size (classical IVF practice). Assignment then touches every
     * row exactly ONCE (a narrow transform), so the full build is one
     * bounded fit + one full pass. Inputs at or under the bound fit on
-    * everything — small/fixture corpora are bit-identical to the
-    * pre-sampling behavior. `fitRows` records how many rows the
-    * quantizer saw. */
+    * everything. At or below `localFitRows` that fit runs on the driver
+    * (see below) and yields different — equally valid — centroids than
+    * the MLlib fit; bit-identity with the MLlib behavior needs
+    * `localFitRows = 0`. `fitRows` records how many rows the quantizer
+    * saw. */
   def fit(df: DataFrame, embCol: String, idCol: String, k: Int,
           seed: Long = 42L, maxFitRows: Long = 1000000L,
           localFitRows: Long = 262144L): Model = {

@@ -578,10 +578,15 @@ object TextAnalysis {
       .select(
         col("doc_id"),
         size(col("toks")).as("n_tokens"),
-        (lit(1.0) - size(array_distinct(col("toks"))).cast("double") / size(col("toks")))
-          .as("dup_token_frac"),
-        (lit(1.0) - size(array_distinct(col("grams"))).cast("double") / size(col("grams")))
-          .as("dup_ngram_frac"))
+        dupFrac(col("toks")).as("dup_token_frac"),
+        dupFrac(col("grams")).as("dup_ngram_frac"))
+
+  /** Share of an array's elements that repeat an earlier one —
+    * [[repetitionProfile]]'s `dup_token_frac` / `dup_ngram_frac`
+    * spelling, shared with callers that score inside their own
+    * projection (IncrementalCorpus.curate). */
+  private[ext] def dupFrac(arr: Column): Column =
+    lit(1.0) - size(array_distinct(arr)).cast("double") / size(arr)
 
   /** Documents below both repetition thresholds — the kept (non-spam)
     * set, original columns intact. */

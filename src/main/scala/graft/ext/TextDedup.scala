@@ -467,7 +467,8 @@ object TextDedup {
     stagingPath match {
       case Some(p) =>
         t.write.mode("overwrite").parquet(p)
-        t.sparkSession.read.parquet(p)
+        // read back under the written schema: no footer-inference job
+        t.sparkSession.read.schema(t.schema).parquet(p)
       case None => t.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
@@ -739,15 +740,19 @@ object TextDedup {
     * Requires the pre-exploded `indexBands` table ([[bandRows]] rows,
     * persisted append-only alongside the index). Per batch, the plan is
     * three MAP-SIDE passes over persisted index data — each a scan
-    * probed by a broadcast of delta-derived keys, no index-side
-    * exchange:
-    *  1. the id-skip: index ids ⋈ broadcast(batch ids);
+    * LEFT-SEMI-joined to a broadcast of delta-derived keys, no
+    * index-side exchange:
+    *  1. the id-skip: index ids ⋉ broadcast(batch ids);
     *  2. candidate generation: `indexBands` (two thin columns + id)
-    *     ⋈ broadcast(the delta's ≤ |delta|·bands distinct band keys);
-    *     only matching rows reach the (tiny) bucket-size aggregate and
-    *     the pair join;
-    *  3. the verify lookup: index `(id, shh, sig)` ⋈ broadcast(the
+    *     ⋉ broadcast(the delta's ≤ |delta|·bands band keys); only
+    *     matching rows reach the (tiny) bucket-size aggregate and the
+    *     pair join;
+    *  3. the verify lookup: index `(id, shh, sig)` ⋉ broadcast(the
     *     candidate index ids — bounded by the capped candidate volume).
+    * A semi join keeps each probe row once however often its key
+    * repeats on the broadcast side, so the key sets broadcast as they
+    * are — no distinct() shuffle (and job) per key set; the dropped ids
+    * leave the batch the same way, through a broadcast anti-join.
     * Every shuffle that remains is delta- or candidate-sized. The scan
     * term (reading the index's columns once per batch) is the price of
     * a plain-parquet layout; the EXCHANGE term — the part that grows
@@ -800,11 +805,13 @@ object TextDedup {
     }
     // id-skip without an index exchange: ids in BOTH sides surface via a
     // broadcast of the (small) batch id set against the index scan, then
-    // leave the batch through a second broadcast anti-join
-    val batchIds = batch.select(col(idCol).as("_graft_batch_id")).distinct()
-    val alreadyIndexed = index
-      .join(broadcast(batchIds), col("id") === col("_graft_batch_id"))
-      .select(col("id").as("_graft_dup_id")).distinct()
+    // leave the batch through a second broadcast anti-join. Every probe
+    // below is a SEMI (or anti) join against a broadcast key set, which
+    // is indifferent to duplicate keys — no distinct() shuffle is needed
+    // to prepare a build side
+    val alreadyIndexed = index.select(col("id").as("_graft_dup_id"))
+      .join(broadcast(batch.select(col(idCol).as("_graft_batch_id"))),
+        col("_graft_dup_id") === col("_graft_batch_id"), "left_semi")
     val fresh = batch.join(broadcast(alreadyIndexed),
       batch(idCol) === col("_graft_dup_id"), "left_anti")
     val batchSig = materialize(
@@ -812,9 +819,9 @@ object TextDedup {
     val batchBands = bandRows(batchSig, numHashes, bands)
     // index rows in the delta's buckets — the only index band rows that
     // can decide anything (an untouched bucket pairs no batch member)
-    val touched = batchBands.select(col("band"), col("bh")).distinct()
-    val idxTouched = indexBands.join(broadcast(touched), Seq("band", "bh"))
-      .select(col("band"), col("bh"), col("id"))
+    val idxTouched = indexBands.select(col("band"), col("bh"), col("id"))
+      .join(broadcast(batchBands.select(col("band"), col("bh"))),
+        Seq("band", "bh"), "left_semi")
     // the cap counts index∪batch members per bucket, exactly like the
     // union-table bucketCandidates; both aggregates are bounded by the
     // delta's bucket count (index side: only touched rows survive)
@@ -845,15 +852,13 @@ object TextDedup {
     // batch-batch edge), and no side flags are needed
     val cand = ib.unionByName(bb.select(col("id_a"), col("id_b")))
     // verify lookup: only CANDIDATE index rows pay the (heavy) shh read
-    val candIdx = ib.select(col("id_a").as("_graft_cand_id")).distinct()
-    val idxLookup = index
-      .join(broadcast(candIdx), col("id") === col("_graft_cand_id"))
-      .select(col("id"), col("shh"), col("sig"))
+    val idxLookup = index.select(col("id"), col("shh"), col("sig"))
+      .join(broadcast(ib.select(col("id_a").as("_graft_cand_id"))),
+        col("id") === col("_graft_cand_id"), "left_semi")
     val lookup = idxLookup
       .unionByName(batchSig.select(col("id"), col("shh"), col("sig")))
     val edges = verifyCandidates(cand, lookup, numHashes, threshold)
-    val dropped = edges.select(col("id_b").as("_graft_dup_id")).distinct()
-    fresh.join(broadcast(dropped),
+    fresh.join(broadcast(edges.select(col("id_b").as("_graft_dup_id"))),
       fresh(idCol) === col("_graft_dup_id"), "left_anti")
   }
 

@@ -232,56 +232,46 @@ object GraftFunctions {
       "graft_struct_at takes (struct, ordinal int literal)")
   }
 
-  /** Register graft functions in an existing session (idempotent). */
+  /** Every graft function name with its builder, in registration order. */
+  private lazy val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_bloom_might_contain" -> bloomBuilder,
+    "graft_bloom_build" -> bloomBuildBuilder,
+    "graft_vecsum" -> vecSumBuilder,
+    "graft_quantize_int8" -> quantizeBuilder,
+    "graft_lsh_bucket" -> lshBucketBuilder,
+    "graft_cosine_sim" -> cosineSimBuilder,
+    "graft_simhash64" -> simHashBuilder,
+    "graft_minhash64" -> minHashBuilder,
+    "graft_topk_by" -> topKByBuilder,
+    "graft_heavy_hitters" -> heavyHittersBuilder,
+    "graft_shingles" -> shinglesBuilder,
+    "graft_repetition_ok" -> repetitionOkBuilder,
+    "graft_bloom_contains_any" -> bloomContainsAnyBuilder,
+    "graft_struct_at" -> structAtBuilder,
+    "graft_kll_quantiles" -> kllQuantilesBuilder,
+    "graft_kll_quantiles_cont" -> kllQuantilesContBuilder,
+    "graft_kll_sketch" -> kllSketchBuilder,
+    "graft_int8_pack" -> int8PackBuilder,
+    "graft_int8_cosine" -> int8CosineBuilder,
+    "graft_kll_merge" -> kllMergeBuilder,
+    "graft_kll_values" -> kllValuesBuilder,
+    "graft_kll_values_cont" -> kllValuesContBuilder,
+    "graft_pos_sum" -> posSumBuilder,
+    "graft_bpe_apply" -> bpeApplyBuilder)
+
+  /** Register graft functions in an existing session — idempotent per
+    * session: the lazy Column APIs call this on every use, so a session
+    * that already holds every graft function (from an earlier call or
+    * from [[GraftExtensions]]) is left untouched instead of re-registering
+    * each one (which logs a "replaced a previously registered function"
+    * warning per function per call). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain", bloomBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_build", bloomBuildBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vecsum", vecSumBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_quantize_int8", quantizeBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_bucket", lshBucketBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine_sim", cosineSimBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", simHashBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash64", minHashBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk_by", topKByBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_heavy_hitters", heavyHittersBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", shinglesBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_repetition_ok", repetitionOkBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains_any", bloomContainsAnyBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_struct_at", structAtBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_quantiles", kllQuantilesBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_quantiles_cont", kllQuantilesContBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_sketch", kllSketchBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_int8_pack", int8PackBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_int8_cosine", int8CosineBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_merge", kllMergeBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_values", kllValuesBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kll_values_cont", kllValuesContBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pos_sum", posSumBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_apply", bpeApplyBuilder, "scala_udf")
+    val registry = spark.sessionState.functionRegistry
+    if (!builders.forall { case (name, _) =>
+        registry.functionExists(FunctionIdentifier(name)) })
+      builders.foreach { case (name, builder) =>
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+      }
   }
 
   /** Column API for the mergeable KLL quantile aggregate; registers

@@ -743,7 +743,7 @@ object Snapshots {
     * itself (immutable dirs ⇒ compute once, ever) is unchanged, and
     * distinct target paths make the writers trivially independent.
     * Failures rethrow their cause so callers see the original error. */
-  private def fillDirCaches(writers: Seq[() => Unit]): Unit =
+  private[graft] def fillDirCaches(writers: Seq[() => Unit]): Unit =
     if (writers.sizeIs <= 1) writers.foreach(_.apply())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -766,10 +766,16 @@ object Snapshots {
           // caller has thrown (they could race a retry or keep writing
           // under a session being torn down): cancel everything still
           // queued and WAIT for in-flight writers to finish before
-          // rethrowing the first cause
-          futs.foreach(_.cancel(false))
-          pool.shutdown()
-          pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
+          // rethrowing the first cause. A failure of the cleanup itself
+          // (an interrupted wait) rides along as suppressed: `t` is the
+          // root cause the caller must see
+          try {
+            futs.foreach(_.cancel(false))
+            pool.shutdown()
+            pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
+          } catch {
+            case cleanup: Throwable if cleanup ne t => t.addSuppressed(cleanup)
+          }
           throw t
       } finally pool.shutdown()
     }

@@ -499,4 +499,21 @@ class FunctionsSpec extends AnyFunSuite {
       e.getMessage.toLowerCase.contains("datatype") ||
       e.getMessage.toLowerCase.contains("cannot resolve"))
   }
+
+  test("register is idempotent per session: a second call changes nothing") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    def graftInfos() = registry.listFunction()
+      .filter(_.funcName.startsWith("graft_"))
+      .map(f => f -> registry.lookupFunction(f).get).toMap
+    GraftFunctions.register(fresh)
+    val first = graftInfos()
+    assert(first.size >= 24 && first.contains(FunctionIdentifier("graft_shingles")))
+    GraftFunctions.register(fresh)
+    val second = graftInfos()
+    // re-registration would install a NEW ExpressionInfo per function
+    assert(second.keySet == first.keySet)
+    first.foreach { case (f, info) => assert(second(f) eq info, f.funcName) }
+  }
 }

@@ -434,6 +434,113 @@ class IncrementalCorpusSpec extends AnyFunSuite {
       .deleteQuietly(new java.io.File(root))
   }
 
+  /** The pre-single-pass curate spelling, kept as the reference: the
+    * delta self-joined to three per-id profile frames (the x182
+    * stage-1 shape) and filtered on the joined scores. */
+  private def joinCurate(delta: org.apache.spark.sql.DataFrame,
+                         c: IncrementalCorpus.Config,
+                         vocab: org.apache.spark.sql.DataFrame) = {
+    import graft.ext.TextAnalysis
+    val id = col(c.idCol)
+    val prof = TextAnalysis.profile(delta, c.textCol, c.idCol)
+      .select(id, col("quality"), col("lang_guess"))
+    val rep = TextAnalysis.repetitionProfile(delta, c.textCol, c.idCol)
+      .select(col("doc_id").as(c.idCol), col("dup_ngram_frac"))
+    val oov = TextAnalysis.oovProfile(delta, c.textCol, c.idCol,
+      vocab.select(col("token"))).select(id, col("oov_rate"))
+    delta.select(id, col(c.textCol))
+      .join(prof, Seq(c.idCol)).join(rep, Seq(c.idCol))
+      .join(oov, Seq(c.idCol))
+      .filter(col("quality") >= c.minQuality &&
+        col("dup_ngram_frac") <= c.maxDupNgramFrac &&
+        col("lang_guess") =!= "und" && col("oov_rate") <= c.maxOovRate)
+      .select(id, col(c.textCol), col("lang_guess"))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.mkString("|")).toSeq.sorted
+
+  test("single-pass curate equals the three-frame join spelling on the " +
+    "curation fixtures (engineered batches under two vocabs, documents)") {
+    // the engineered batches under the full vocab (quality cut only) and
+    // a narrow one (oov cuts too), plus the documents corpus under its
+    // top-30 vocab (the x184 vocab rule)
+    val docs = Tables(spark, TestSpark.sf, "documents")
+      .select(col("doc_id").as("id"), col("text").as("t"))
+    val docsVocab = graft.ext.TextAnalysis.tokenTopK(docs, "t", 30)
+      .select(col("token"))
+    val narrow = enA.split(" ").distinct.toSeq.toDF("token")
+    val cases = Seq(
+      ((batch0 ++ batch1 ++ batch2).toDF("id", "t"), vocabDf),
+      ((batch0 ++ batch1 ++ batch2).toDF("id", "t"), narrow),
+      (docs, docsVocab))
+    cases.foreach { case (delta, vocab) =>
+      val want = rows(joinCurate(delta, cfg, vocab))
+      assert(rows(IncrementalCorpus.curate(delta, cfg, vocab)) == want)
+      assert(want.nonEmpty && want.size < delta.count(),
+        "fixture must both keep and cut")
+    }
+  }
+
+  test("curate yields at most one row per delta row: duplicate ids are " +
+    "scored row by row, never multiplied") {
+    // id 1 arrives twice (same text) next to a unique id 3; the join
+    // spelling pairs every copy with every profile row of its id
+    // (2 × 2 × 2 = 8 rows), the single pass keeps exactly the 2 copies
+    val delta = Seq(1L -> enA, 1L -> enA, 3L -> enB).toDF("id", "t")
+    val ids = IncrementalCorpus.curate(delta, cfg, vocabDf)
+      .select(col("id")).as[Long].collect().toSeq.sorted
+    assert(ids == Seq(1L, 1L, 3L))
+    assert(joinCurate(delta, cfg, vocabDf).filter(col("id") === 1L)
+      .count() == 8L)
+  }
+
+  test("a replay over a stale _graft_staging/<b>/clean equals a run that " +
+    "never crashed, and no staging dir survives a commit") {
+    def stagingGone(root: String) =
+      !new java.io.File(s"$root/_graft_staging").exists
+    val clean = Files.createTempDirectory("graft-inc-nocrash").toString
+    val r2 = Files.createTempDirectory("graft-inc-stale").toString
+    val portable = Files.createTempDirectory("graft-inc-pstage").toString
+    try {
+      applyAll(clean)
+      assert(accepted(clean) == expected)
+      assert(stagingGone(clean), "kernel-mode commit left staging behind")
+      applyAll(portable, cfg.copy(portableDedup = true))
+      assert(stagingGone(portable), "portable commit left staging behind")
+
+      IncrementalCorpus.applyDelta(batch0.toDF("id", "t"), 0, r2, cfg,
+        vocabDf, benchDf, "text")
+      val once = new java.util.concurrent.atomic.AtomicBoolean(true)
+      IncrementalCorpus.faultHook.set(p =>
+        if (p == "post-docs" && once.getAndSet(false))
+          throw new RuntimeException("injected crash at post-docs"))
+      try {
+        intercept[RuntimeException] {
+          IncrementalCorpus.applyDelta(batch1.toDF("id", "t"), 1, r2, cfg,
+            vocabDf, benchDf, "text")
+        }
+      } finally IncrementalCorpus.faultHook.set(_ => ())
+      val staleClean = s"$r2/_graft_staging/1/clean"
+      assert(new java.io.File(staleClean).exists,
+        "the crashed attempt should have left its clean delta staged")
+      // make the leftover WRONG (another batch's rows) — a replay that
+      // reused it instead of recomputing would land the wrong survivors
+      batch0.toDF("id", "t").withColumn("lang_guess", lit("en"))
+        .write.mode("overwrite").parquet(staleClean)
+      IncrementalCorpus.applyDelta(batch1.toDF("id", "t"), 1, r2, cfg,
+        vocabDf, benchDf, "text")
+      IncrementalCorpus.applyDelta(batch2.toDF("id", "t"), 2, r2, cfg,
+        vocabDf, benchDf, "text")
+      assert(accepted(r2) == accepted(clean))
+      def texts(root: String) = rows(IncrementalCorpus.readAccepted(spark, root)
+        .select(col("id"), col("t"), col("lang_guess"), col("ingest_batch")))
+      assert(texts(r2) == texts(clean))
+      assert(stagingGone(r2))
+    } finally Seq(clean, r2, portable).foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+  }
+
   test("a delta carrying a stage-internal column fails fast") {
     val root = Files.createTempDirectory("graft-inc-guard").toString
     try {

@@ -721,4 +721,35 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(plan.contains("PushedFilters: [IsNotNull(id), GreaterThan(id,90)]"),
       s"filter not pushed to the snapshot scan:\n$plan")
   }
+
+  test("fillDirCaches keeps a failed writer's root cause when the " +
+    "cleanup wait is interrupted (the interrupt rides as suppressed)") {
+    import java.util.concurrent.CountDownLatch
+    val failNow = new CountDownLatch(1)
+    val siblingStarted = new CountDownLatch(1)
+    val releaseSibling = new CountDownLatch(1)
+    val root = new IllegalStateException("writer failed")
+    val caught = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val caller = new Thread(() =>
+      try Snapshots.fillDirCaches(Seq(
+        () => { failNow.await(); throw root },
+        () => { siblingStarted.countDown(); releaseSibling.await() }))
+      catch { case t: Throwable => caught.set(t) })
+    caller.start()
+    try {
+      siblingStarted.await()
+      failNow.countDown()
+      // the caller reaches the cleanup's timed wait on the still-running
+      // sibling (fut.get() waits untimed, awaitTermination timed)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (caller.getState != Thread.State.TIMED_WAITING &&
+          System.nanoTime() < deadline) Thread.sleep(5)
+      assert(caller.getState == Thread.State.TIMED_WAITING)
+      caller.interrupt()
+      caller.join(60000)
+      assert(!caller.isAlive)
+    } finally releaseSibling.countDown()
+    assert(caught.get() eq root, s"root cause lost: ${caught.get()}")
+    assert(root.getSuppressed.exists(_.isInstanceOf[InterruptedException]))
+  }
 }
